@@ -20,8 +20,8 @@ object SparkEntry {
     Transcripts.fromDocuments(s, dir)
 
   /** Per-invocation nonce'd /tmp staging dir for the staged-shape
-    * queries. The nonce keeps SIMULTANEOUS invocations (concurrent
-    * Verify + Bench, or a bench re-pass) from clobbering each other's
+    * queries. The nonce keeps SIMULTANEOUS invocations (two
+    * concurrent Verify runs, or a perfbench sweep next to one) from clobbering each other's
     * staging writes; every dir is registered for recursive deletion at
     * JVM exit so repeated sweeps don't accumulate staged corpus copies
     * in /tmp (r5 advice). Deletion can't happen earlier — the returned
@@ -174,8 +174,6 @@ object SparkEntry {
           round(col("pii_risk_score"), 6).as("pii_risk_score"), col("keep"))),
     "q_conv_running" -> ((s, dir) =>
       pipeline.Conversation.runningState(Verdict(transcripts(s, dir)))),
-    "q_conv_rollup_salted" -> ((s, dir) =>
-      pipeline.Conversation.rollupSalted(Verdict(transcripts(s, dir)))),
     // distributed prefix-scan variant of q_conv_running: low threshold /
     // few blocks so the salted path (heavy-conv blocking + offset merge)
     // actually executes on the small sf tables the oracle reads
@@ -356,7 +354,6 @@ object SparkEntry {
     "q_conv_rollup" -> Oracle.convRollupQuery,
     "q_conv_boost" -> Oracle.convBoostQuery,
     "q_conv_running" -> Oracle.convRunningQuery,
-    "q_conv_rollup_salted" -> Oracle.convRollupQuery, // identical result to the direct rollup — the salt only reshapes the shuffle
     "q_conv_running_salted" -> Oracle.convRunningQuery, // identical to the direct window — blocks only reshape the shuffle
     "q_llm_verdict" -> Oracle.llmVerdictQuery,
     "q_llm_pii_only" -> Oracle.llmPiiOnlyQuery,

@@ -122,26 +122,24 @@ object GopherQuality {
     * **with an adaptive mega-doc dispatch** (r6 verdict item 2): the
     * fused shape's per-doc windows serialize WITHIN one document, so a
     * corpus carrying even one multi-GB "document" would straggle on one
-    * task. A doc of > T whitespace tokens must have ≥ 2T+1 characters,
-    * so one cheap screen — the `n_chars` column when the table carries
-    * it (column-pruned scan, pushed predicate), else `length(text)` —
-    * decides the plan: any candidate mega-doc ⇒ the row-identical
-    * [[qualityBlocked]] at production thresholds (`heavyThreshold`
-    * tokens / `numBlocks` blocks); none ⇒ the fused shape, whose cost
-    * profile is unchanged (measured: probe ≈ 0.1 s at sf0.1 vs ~2 s of
-    * extra bookkeeping had the blocked plan been dispatched blind —
-    * GopherProbe `blockedProd` 4.8 s vs fused 2.7 s warm).
+    * task. Tokens come from `split(text, " ")`, which keeps the empty
+    * tokens of a space run, so T+1 tokens need at least T spaces: a doc
+    * of > T tokens has ≥ T characters. One cheap screen on that bound —
+    * the `n_chars` column when the table carries it (column-pruned
+    * scan, pushed predicate), else `length(text)` — decides the plan:
+    * any candidate mega-doc ⇒ the row-identical [[qualityBlocked]] at
+    * production thresholds (`heavyThreshold` tokens / `numBlocks`
+    * blocks); none ⇒ the fused shape, whose cost profile is unchanged
+    * (measured in round 7 at sf0.1 on 32 cores: screen ≈ 0.1 s vs ~2 s
+    * of extra bookkeeping had the blocked plan been dispatched blind —
+    * blocked at production thresholds 4.8 s vs fused 2.7 s warm).
     *
-    * Fused vs per-leg (GopherProbe, sf0.1/local[32], warm best-of-3):
-    * fused 2.56 s vs per-leg 2.34 s — LOCAL parity, because a
-    * page-cached 100 MB input makes 9 redundant scans free. The fused
-    * default is chosen for the 100 TB shape, where the 9→1 corpus-scan
-    * reduction is the dominant term; the equivalence is spec-asserted.
-    * `materializeTokens` keeps the recompute-vs-materialize knob on
-    * the token stream (true localCheckpoints it — infeasible at 100 TB,
-    * kept for measurement parity with earlier rounds). */
+    * Fused vs per-leg (round 7, sf0.1/local[32], warm best-of-3): fused
+    * 2.56 s vs per-leg 2.34 s — LOCAL parity, because a page-cached
+    * 100 MB input makes 9 redundant scans free. The fused default is
+    * chosen for the 100 TB shape, where the 9→1 corpus-scan reduction is
+    * the dominant term; the equivalence is spec-asserted. */
   def quality(spark: SparkSession, dir: String,
-              materializeTokens: Boolean = false,
               numBlocks: Int = 32,
               heavyThreshold: Long = 1000000L): DataFrame = {
     val docs = Inputs.documents(spark, dir)
@@ -149,21 +147,19 @@ object GopherQuality {
       if (docs.columns.contains("n_chars")) col("n_chars")
       else length(col("text"))
     val mightBeHeavy =
-      !docs.filter(screen >= lit(2 * heavyThreshold + 1)).isEmpty
+      !docs.filter(screen >= lit(heavyThreshold)).isEmpty
     if (mightBeHeavy) qualityBlocked(spark, dir, numBlocks, heavyThreshold)
     else assemble(docs.select("doc_id", "text"),
-      qualityFusedLegs(spark, dir, materializeTokens))
+      qualityFusedLegs(spark, dir))
   }
 
   /** Per-leg re-derivation: each of the 9 metrics runs its own
     * scan→explode→window chain. This is the PROOF shape (each leg reads
     * independently and mirrors the oracle CTE 1:1) and the baseline the
     * fused default is equivalence-tested against. */
-  def qualityPerLeg(spark: SparkSession, dir: String,
-                    materializeTokens: Boolean = false): DataFrame = {
+  def qualityPerLeg(spark: SparkSession, dir: String): DataFrame = {
     val docs = Inputs.documents(spark, dir).select("doc_id", "text")
-    val t0 = toks(docs)
-    val t = if (materializeTokens) t0.localCheckpoint() else t0
+    val t = toks(docs)
     val legs =
       TopNs.map(n => topNgramFrac(t, n)) ++ DupNs.map(n => dupNgramFrac(t, n))
     assemble(docs, legs)
@@ -194,11 +190,9 @@ object GopherQuality {
     *   4. pivots the 9 (doc_id, metric, frac) streams back to columns.
     * Result-identical to [[qualityPerLeg]] (GopherQualitySpec asserts
     * it on fixtures; the shared oracle hashes both). */
-  private def qualityFusedLegs(spark: SparkSession, dir: String,
-                               materializeTokens: Boolean): Seq[DataFrame] = {
+  private def qualityFusedLegs(spark: SparkSession, dir: String): Seq[DataFrame] = {
     val docs = Inputs.documents(spark, dir).select("doc_id", "text")
-    val t0 = toks(docs)
-    val t = if (materializeTokens) t0.localCheckpoint() else t0
+    val t = toks(docs)
     val byPos = Window.partitionBy("doc_id").orderBy("pos")
     // gram stream parameterized per width family (the blocked variant's
     // r7 split, applied here too): the two consumer branches re-derive

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -31,20 +32,23 @@ object Inputs {
   // directory's (mtime, newest-file mtime, file count) fingerprint so a
   // dataset REWRITTEN at the same path in-session (regenerated test
   // data, growing corpus) invalidates the entry instead of silently
-  // reusing a stale split count
+  // reusing a stale split count. The fingerprint goes through the
+  // Hadoop FileSystem so `file:`, `hdfs:` and `s3a:` URIs resolve too.
   private val splitCounts =
     scala.collection.concurrent.TrieMap.empty[(String, Long, Long, Int), Int]
 
-  private def pathKey(path: String): (String, Long, Long, Int) = {
-    val f = new java.io.File(path)
-    val kids = Option(f.listFiles()).getOrElse(Array.empty)
-    (path, f.lastModified(),
-      if (kids.isEmpty) f.length() else kids.map(_.lastModified()).max, kids.length)
+  private def pathKey(spark: SparkSession, path: String): (String, Long, Long, Int) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(p)
+    val kids = if (st.isDirectory) fs.listStatus(p) else Array.empty[FileStatus]
+    (path, st.getModificationTime,
+      if (kids.isEmpty) st.getLen else kids.map(_.getModificationTime).max, kids.length)
   }
 
   private def read(spark: SparkSession, path: String): DataFrame = {
     val df = spark.read.parquet(path)
-    val n = splitCounts.getOrElseUpdate(pathKey(path), df.rdd.getNumPartitions)
+    val n = splitCounts.getOrElseUpdate(pathKey(spark, path), df.rdd.getNumPartitions)
     val dp = spark.sparkContext.defaultParallelism
     if (n < dp) df.repartition(dp) else df
   }

@@ -426,7 +426,7 @@ object Similarity {
     * TakeOrderedAndProject.
     *
     * Measured recall vs [[annTopK]] brute force (same k=5; full
-    * recall-vs-(nprobe, iterations) grid from tools/RecallProbe in
+    * recall-vs-(nprobe, iterations) grid, measured in round 7, in
     * COVERAGE.md; sf0.001 points pinned by OperatorsSpec): at
     * iterations=1, nprobe=2 finds 3/5 at BOTH sf, rising to 4/5 (sf0.001)
     * and 5/5 (sf0.01) at nprobe=8 — i.e. probing 2/16 cells (12.5% of

@@ -15,10 +15,10 @@ import graft.rules.{Pii, PiiRules}
  *    partition by conv_id so the per-turn map work before/after stays
  *    pipelined in the same stage;
  *  - mega-conversations (single conv_id with ~10^8 turns) would serialize
- *    one window partition; [[rollupSalted]] shows the two-phase
- *    salt-partial/merge pattern for the aggregate path (windows that
- *    need full ordering use range re-partitioning by (conv_id, turn_idx)
- *    instead — `repartitionByRange` keeps ordered runs contiguous).
+ *    one window partition; [[runningStateSalted]] splits such a
+ *    conversation into order-contiguous turn blocks and merges per-block
+ *    offsets (combinable aggregates need no such step: their map-side
+ *    partials already spread the skewed key).
  */
 object Conversation {
 
@@ -52,22 +52,14 @@ object Conversation {
         .as("cum_dropped"))
 
   /**
-   * Salted two-phase per-conversation rollup: phase 1 aggregates on
-   * (conv_id, salt) — spreading a mega-conversation over `salts`
-   * reducers — phase 2 merges the partials. Result is IDENTICAL to the
-   * direct groupBy (same oracle), which is exactly the point: the salt
-   * only reshapes the shuffle.
-   */
-  /**
    * Distributed-prefix-scan equivalent of [[runningState]] for skewed
    * inputs. A mega-conversation makes the plain window a single
    * straggler: ALL its rows shuffle into one task, which sorts and scans
    * them alone while the rest of the cluster idles (map-side partials —
-   * the thing that neutralizes skew for [[rollupSalted]]-style combinable
-   * aggregates — do not exist for ordered windows). Fix: split heavy
-   * conversations (> heavyThreshold turns; found with one cheap
-   * count-per-conv pass, broadcast back) into `numBlocks`
-   * ORDER-CONTIGUOUS turn_idx ranges. Phase 1 computes within-block
+   * the thing that neutralizes skew for combinable aggregates — do not
+   * exist for ordered windows). Fix: split heavy conversations
+   * (> heavyThreshold turns; found with one cheap count-per-conv pass,
+   * broadcast back) into `numBlocks` ORDER-CONTIGUOUS turn_idx ranges. Phase 1 computes within-block
    * running state under the (conv_id, blk) shuffle — the mega conv now
    * spreads over `numBlocks` tasks; phase 2 aggregates ONE row per block
    * (map-side combine), window-scans that tiny table for per-block
@@ -76,9 +68,10 @@ object Conversation {
    * tiny at any corpus scale).
    *
    * Result is row-identical to [[runningState]] on ANY input — same
-   * oracle SQL — the blocks only reshape the shuffle: the same
-   * salt-partial/merge idea as [[rollupSalted]], lifted to an ordered
-   * prefix scan. Bench's skew gate measures the wall-clock win.
+   * oracle SQL — the blocks only reshape the shuffle: a partial/merge
+   * split lifted to an ordered prefix scan. ConversationSpec pins the
+   * row identity on a skewed corpus with the heavy path active; the
+   * wall-clock win on such a corpus is not measured.
    */
   def runningStateSalted(verdict: DataFrame, numBlocks: Int = 32,
                          heavyThreshold: Long = 100000L): DataFrame = {
@@ -119,20 +112,5 @@ object Conversation {
       .select(col("conv_id"), col("turn_idx"),
         (coalesce(col("rows_before"), lit(0L)) + col("rn_b")).cast("int").as("rn"),
         (coalesce(col("dropped_before"), lit(0L)) + col("cum_b")).as("cum_dropped"))
-  }
-
-  def rollupSalted(verdict: DataFrame, salts: Int = 8): DataFrame = {
-    val partial = verdict
-      .withColumn("salt", pmod(hash(col("turn_idx")), lit(salts)))
-      .groupBy("conv_id", "salt").agg(
-        count(lit(1)).as("p_turns"),
-        sum(when(!col("keep"), 1L).otherwise(0L)).as("p_dropped"),
-        sum(when(col("pii_risk_score") > 0.0, 1L).otherwise(0L)).as("p_pii"),
-        max("pii_risk_score").as("p_max"))
-    partial.groupBy("conv_id").agg(
-      sum("p_turns").as("turns"),
-      sum("p_dropped").as("dropped"),
-      sum("p_pii").as("pii_turns"),
-      round(max("p_max"), 6).as("max_risk"))
   }
 }

@@ -18,17 +18,9 @@ import graft.rules.PiiRules
  *  - [[generate]]: a pure column-expression synthetic generator over
  *    `spark.range` — fully distributed (no driver-side loops), seeded by
  *    row id, with a configurable skewed mega-conversation for salting /
- *    AQE tests. Used by the bench harness at arbitrary scale.
+ *    AQE tests (ConversationSpec).
  */
 object Transcripts {
-
-  /** Cache-invalidation fingerprint for [[generate]]: Bench keys its
-    * /tmp corpus cache by this + the generation parameters, so a change
-    * to the generator's SEMANTICS (sentence pool, injection table, hash
-    * keying, skew rule) can't silently reuse a stale corpus and shift
-    * cross-round comparisons. Rule: bump the suffix whenever the bytes
-    * [[generate]] would produce for a fixed (n, nConvs, skewPct) change. */
-  val generatorVersion: String = "g1"
 
   /** Injection fragments are keyed by doc_id % 11: residues 2/3/4 carry PII
     * forms that the reference's FP digit-gate provably nullifies (risk 0);

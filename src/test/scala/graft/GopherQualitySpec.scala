@@ -40,13 +40,6 @@ class GopherQualitySpec extends AnyFunSuite with Matchers with SparkTestBase {
     rows(3L).getAs[Double]("dup5_frac") shouldBe 0.0
   }
 
-  test("materialized-tokens variant is result-identical to the streaming default") {
-    val a = GopherQuality.quality(spark, dir).collect().sortBy(_.getLong(0)).map(_.toString)
-    val b = GopherQuality.quality(spark, dir, materializeTokens = true)
-      .collect().sortBy(_.getLong(0)).map(_.toString)
-    a shouldBe b
-  }
-
   test("fused single-scan default is result-identical to the per-leg proof shape") {
     val fused = GopherQuality.quality(spark, dir)
     val perLeg = GopherQuality.qualityPerLeg(spark, dir)
@@ -117,6 +110,24 @@ class GopherQualitySpec extends AnyFunSuite with Matchers with SparkTestBase {
         numBlocks = 4, heavyThreshold = 3).collect()
       .sortBy(_.getLong(0)).map(_.toString)
     dispatched shouldBe fused
+  }
+
+  test("quality() screens space-run docs by chars: empty tokens still count toward the bound") {
+    // split(text, " ") keeps the empty tokens of a space run, so this
+    // 63-char doc has 61 tokens — over a 40-token threshold although it
+    // is shorter than 2·40+1 chars; the screen must still send it to the
+    // blocked plan, whose rows equal the fused plan's
+    import spark.implicits._
+    val d = Files.createTempDirectory("gopher_spaces").toString
+    val spaces = "x" + " " * 30 + "y" + " " * 30 + "z"
+    Seq((0L, spaces), (1L, "one two three four five six"))
+      .toDF("doc_id", "text").write.parquet(s"$d/documents.parquet")
+    val dispatched = GopherQuality.quality(spark, d, numBlocks = 4, heavyThreshold = 40)
+    dispatched.queryExecution.executedPlan.toString should include("blk")
+    val fused = GopherQuality.quality(spark, d)
+    fused.queryExecution.executedPlan.toString should not include "blk"
+    dispatched.collect().sortBy(_.getLong(0)).map(_.toString) shouldBe
+      fused.collect().sortBy(_.getLong(0)).map(_.toString)
   }
 
   test("blocked variant on a pathological mega-doc: spans crossing block boundaries merge exactly") {

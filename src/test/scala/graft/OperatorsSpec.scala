@@ -29,6 +29,29 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkTestBase {
       .foreach(s => all(s.map(_.toInt)) should be < 128)
   }
 
+  test("Inputs split-count memo follows a rewrite at the same file: URI") {
+    import spark.implicits._
+    val d = "file:" + java.nio.file.Files.createTempDirectory("inputs_uri").toString
+    val dp = spark.sparkContext.defaultParallelism
+    val rows = (0L until 100L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    // 1 MB split and open cost: every small file is its own scan split,
+    // so the split count is the file count
+    val keys = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "1048576"))
+    try {
+      rows.coalesce(1).write.parquet(s"$d/documents.parquet")
+      operators.Inputs.documents(spark, d).rdd.getNumPartitions shouldBe dp
+      // more files than cores: the re-read must see the new layout and
+      // pass the scan through unshuffled, not replay the 1-split count
+      rows.repartition(dp + 2).write.mode("overwrite").parquet(s"$d/documents.parquet")
+      operators.Inputs.documents(spark, d).rdd.getNumPartitions shouldBe dp + 2
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("exact dedup: content hash is a bijection on this all-distinct corpus") {
     val d = Dedup.exact(spark, dir)
     d.count() shouldBe 500

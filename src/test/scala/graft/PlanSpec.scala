@@ -143,11 +143,6 @@ class PlanSpec extends AnyFunSuite with Matchers with SparkTestBase {
     plan should include("minhash_sig")
   }
 
-  test("salted rollup has two exchanges (salt partial + merge) by design") {
-    val r = pipeline.Conversation.rollupSalted(Verdict(Transcripts.fromDocuments(spark, dir)))
-    exchanges(r) shouldBe 2
-  }
-
   test("decontamination: eval grams join broadcast-only, no corpus self-join") {
     val plan = executed(operators.Curation.decontaminate(spark, dir))
     plan should include("BroadcastHashJoin")
