@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{AcAnyExpr, AcScrubExpr, CosineExpr, CosineFDExpr,
-  FingerprintMinExpr, MinHashSigExpr, PiiScanExpr, PyCollapseTrim, SimHashExpr}
+  FingerprintMinExpr, MinHashSigExpr, PiiScanExpr, PyCollapseTrim, SimHashExpr, VaderExpr}
 
 /**
  * Session extensions: registers the engine's custom Catalyst
@@ -13,10 +13,8 @@ import graft.functions.{AcAnyExpr, AcScrubExpr, CosineExpr, CosineFDExpr,
  *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions …
  *   SELECT pii_scan(text), cosine(a.embedding, b.embedding),
  *          minhash_sig(shingles), simhash(tokens, 8),
- *          fingerprint_min(text), py_collapse_trim(text) …
- *
- * (`vader_compound` is a ScalaUDF and registers per-session via
- * [[graft.functions.VaderUdf.register]].)
+ *          fingerprint_min(text), py_collapse_trim(text),
+ *          vader_compound(text) …
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -54,6 +52,7 @@ object GraftExtensions {
   private[graft] val builders: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     fn("pii_scan", classOf[PiiScanExpr], "text")(c => PiiScanExpr(c.head)),
     fn("py_collapse_trim", classOf[PyCollapseTrim], "text")(c => PyCollapseTrim(c.head)),
+    fn("vader_compound", classOf[VaderExpr], "text")(c => VaderExpr(c.head)),
     fn("minhash_sig", classOf[MinHashSigExpr], "text")(c => MinHashSigExpr(c.head)),
     fn("cosine", classOf[CosineExpr], "vec_a, vec_b")(c => CosineExpr(c.head, c(1))),
     fn("simhash", classOf[SimHashExpr], "tokens, hex_len")(c =>
@@ -77,11 +76,9 @@ object GraftExtensions {
 
   /** Same registration against an already-built session (extensions
     * only apply at builder time). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
     builders.foreach { case (name, _, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "scala_udf")
     }
-    graft.functions.VaderUdf.register(spark)
-  }
 }

@@ -50,18 +50,21 @@ object PyText {
 
   /** Python s.split() (no empty tokens, unicode whitespace). */
   def split(s: String): Array[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var out = new Array[String](16)
+    var m = 0
     val n = s.length
     var i = 0
     var start = -1
-    while (i < n) {
-      if (isPyWs(s.charAt(i))) {
-        if (start >= 0) { out += s.substring(start, i); start = -1 }
+    while (i <= n) {
+      if (i == n || isPyWs(s.charAt(i))) {
+        if (start >= 0) {
+          if (m == out.length) out = java.util.Arrays.copyOf(out, m * 2)
+          out(m) = s.substring(start, i); m += 1; start = -1
+        }
       } else if (start < 0) start = i
       i += 1
     }
-    if (start >= 0) out += s.substring(start)
-    out.toArray
+    java.util.Arrays.copyOf(out, m)
   }
 
   /** Codegen entry point (static forwarder): UTF8String in/out. */

@@ -19,9 +19,9 @@ import graft.rules.{Pii, PiiRules}
  *    standard message; never a partial edit. Rows with `keep = true` emit
  *    text byte-identical to the cleaned input (BASELINE.json invariant).
  *
- * The whole thing is one narrow `select` chain with no shuffle: codegen'd
- * expressions plus one deterministic ScalaUDF, the VADER scorer
- * ([[graft.functions.VaderUdf]]) — so it scales linearly with input
+ * The whole thing is one narrow `select` chain with no shuffle, all of it
+ * codegen'd expressions — the VADER scorer included
+ * ([[graft.functions.VaderExpr]]) — so it scales linearly with input
  * splits and Catalyst pushes partition-pruning filters beneath it.
  */
 object Verdict {

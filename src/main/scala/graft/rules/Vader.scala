@@ -92,11 +92,17 @@ object Vader {
     "yeah right" -> -2.0, "cut the mustard" -> 2.0,
     "kiss of death" -> -1.5, "hand to mouth" -> -2.0)
 
-  val PuncList: Seq[String] = Seq(
+  private val PuncList: Array[String] = Array(
     ".", "!", "?", ",", ";", ":", "-", "'", "\"",
     "!!", "!!!", "??", "???", "?!?", "!?!", "?!?!", "!?!?")
 
-  private val punctChars: Set[Char] = """!"#$%&'()*+,-./:;<=>?@[\]^_`{|}~""".toSet
+  /** Python string.punctuation, indexed by char (all ASCII). */
+  private val punctAscii: Array[Boolean] = {
+    val t = new Array[Boolean](128)
+    """!"#$%&'()*+,-./:;<=>?@[\]^_`{|}~""".foreach(c => t(c) = true)
+    t
+  }
+  private def isPunct(c: Char): Boolean = c < 128 && punctAscii(c)
 
   /** Python str.split() whitespace (unicode), matching the reference's
     * tokenizer — single-pass scan, no regex (see PyText). */
@@ -146,161 +152,263 @@ object Vader {
     // built only when some candidate still contains internal punctuation
     // (see fast path below) — rare, so usually never materialized
     lazy val wordsOnly: Set[String] =
-      splitPy(text.filterNot(punctChars.contains)).filter(_.length > 1).toSet
+      splitPy(text.filterNot(isPunct)).filter(_.length > 1).toSet
     // membership in wordsOnly for a ONE-LAYER-stripped candidate:
     //  - a punctuation-free candidate w of len>1 is ALWAYS a member — the
     //    token it came from is p+w or w+p, whose all-punct-removal is
     //    exactly w and enters wordsOnly by construction;
     //  - a candidate with remaining punctuation needs the real set.
     def isValidWord(w: String): Boolean =
-      w.length > 1 && (!w.exists(punctChars.contains) || wordsOnly(w))
+      w.length > 1 && (!w.exists(isPunct) || wordsOnly(w))
     def stripToken(t: String): String = {
       // quick reject: strippable tokens begin or end with a punct char
-      if (!punctChars.contains(t.charAt(0)) && !punctChars.contains(t.charAt(t.length - 1)))
+      if (!isPunct(t.charAt(0)) && !isPunct(t.charAt(t.length - 1)))
         return t
       // punc_after (word+punc) overrides punc_before (punc+word) on
       // collision, matching the Python dict update order
-      val byPrefix = PuncList.collectFirst {
-        case p if t.length > p.length && t.startsWith(p) && isValidWord(t.substring(p.length)) =>
-          t.substring(p.length)
+      var j = 0
+      while (j < PuncList.length) {
+        val p = PuncList(j)
+        if (t.length > p.length && t.endsWith(p)) {
+          val bare = t.substring(0, t.length - p.length)
+          if (isValidWord(bare)) return bare
+        }
+        j += 1
       }
-      val bySuffix = PuncList.collectFirst {
-        case p if t.length > p.length && t.endsWith(p) && isValidWord(t.substring(0, t.length - p.length)) =>
-          t.substring(0, t.length - p.length)
+      j = 0
+      while (j < PuncList.length) {
+        val p = PuncList(j)
+        if (t.length > p.length && t.startsWith(p)) {
+          val bare = t.substring(p.length)
+          if (isValidWord(bare)) return bare
+        }
+        j += 1
       }
-      bySuffix.orElse(byPrefix).getOrElse(t)
+      t
     }
-    splitPy(text).filter(_.length > 1).map(stripToken)
+    val all = splitPy(text)
+    var m = 0
+    all.foreach(t => if (t.length > 1) m += 1)
+    val out = new Array[String](m)
+    m = 0
+    all.foreach(t => if (t.length > 1) { out(m) = stripToken(t); m += 1 })
+    out
   }
 
-  private def allcapDifferential(words: Array[String]): Boolean = {
-    val allcap = words.count(isUpperPy)
-    val capDiff = words.length - allcap
-    capDiff > 0 && capDiff < words.length
+  /** One lowercased word's entries in the three word tables the scorer
+    * reads, so each distinct token costs one hash lookup. `booster` is
+    * 0.0 for a non-booster: every BoosterDict value is ±BIncr. */
+  private final class Entry(val inLex: Boolean, val valence: Double,
+                            val booster: Double, val negate: Boolean)
+
+  private val entries: java.util.HashMap[String, Entry] = {
+    val m = new java.util.HashMap[String, Entry]()
+    (Lexicon.keySet ++ BoosterDict.keySet ++ Negate).foreach { k =>
+      m.put(k, new Entry(Lexicon.contains(k), Lexicon.getOrElse(k, 0.0),
+        BoosterDict.getOrElse(k, 0.0), Negate.contains(k)))
+    }
+    m
   }
 
-  private def negated(word: String): Boolean = {
-    val w = word.toLowerCase
-    Negate.contains(w) || w.contains("n't")
+  /** First word -> second words of every multi-word SpecialCaseIdioms or
+    * BoosterDict key. Tokens hold no whitespace, so a joined sequence in
+    * idiomsCheck can equal a key only when its first two tokens are such
+    * a pair: no pair, no lookup can hit. */
+  private val keyBigrams: java.util.HashMap[String, Set[String]] = {
+    val m = new java.util.HashMap[String, Set[String]]()
+    (SpecialCaseIdioms.keys ++ BoosterDict.keys).map(_.split(' ')).filter(_.length > 1)
+      .foreach(k => m.put(k(0), m.getOrDefault(k(0), Set.empty) + k(1)))
+    m
   }
 
-  private def scalarIncDec(word: String, valence: Double, isCapDiff: Boolean): Double = {
-    BoosterDict.get(word.toLowerCase) match {
-      case None => 0.0
-      case Some(base) =>
+  /** One text's tokens with every per-token fact computed once, in one
+    * pass: lowercased form, table entry (null when in no table),
+    * `isUpperPy`, negation. A repeated token copies its first
+    * occurrence's facts, and `first(k)` is that occurrence (the
+    * `list.index` quirk: a repeated token is scored in its first
+    * occurrence's context, so its valence is the same value). */
+  private final class SentiText(text: String) {
+    private val w = wordsAndEmoticons(text)
+    private val n = w.length
+    private val lw = new Array[String](n)
+    private val ent = new Array[Entry](n)
+    private val up = new Array[Boolean](n)
+    private val neg = new Array[Boolean](n)
+    private val first = new Array[Int](n)
+    private val firstIdx = new java.util.HashMap[String, Integer](n * 2)
+    private var anyLex = false
+    private var isCapDiff = false
+
+    locally {
+      var allcap = 0
+      var k = 0
+      while (k < n) {
+        val f = firstIdx.putIfAbsent(w(k), Integer.valueOf(k))
+        if (f == null) {
+          val l = w(k).toLowerCase
+          val e = entries.get(l)
+          lw(k) = l; ent(k) = e; up(k) = isUpperPy(w(k))
+          neg(k) = (e != null && e.negate) || l.contains("n't")
+          first(k) = k
+          if (e != null && e.inLex) anyLex = true
+        } else {
+          val i = f.intValue
+          lw(k) = lw(i); ent(k) = ent(i); up(k) = up(i); neg(k) = neg(i)
+          first(k) = i
+        }
+        if (up(k)) allcap += 1
+        k += 1
+      }
+      // allcap_differential
+      val capDiff = n - allcap
+      isCapDiff = capDiff > 0 && capDiff < n
+    }
+
+    private def inLex(j: Int): Boolean = ent(j) != null && ent(j).inLex
+
+    /** Per-token valences after the but-check; all zero at once when no
+      * token is in the lexicon. */
+    def sentiments(): Array[Double] = {
+      val s = new Array[Double](n)
+      if (!anyLex) return s
+      var k = 0
+      while (k < n) {
+        val i = first(k)
+        s(k) =
+          if (i < k) s(i)
+          else {
+            val kindOf = i < n - 1 && lw(i) == "kind" && lw(i + 1) == "of"
+            if (kindOf || (ent(i) != null && ent(i).booster != 0.0)) 0.0
+            else sentimentValence(i)
+          }
+        k += 1
+      }
+      butCheck(s)
+    }
+
+    /** Rescales `s` in place around the first "but", else the first
+      * "BUT"; the original finds each value's own index by value, so a
+      * duplicate value can be scaled twice. */
+    private def butCheck(s: Array[Double]): Array[Double] = {
+      var b = firstIdx.get("but")
+      if (b == null) b = firstIdx.get("BUT")
+      if (b == null) return s
+      val bi = b.intValue
+      var p = 0
+      while (p < n) {
+        val v = s(p)
+        var si = 0
+        while (s(si) != v) si += 1
+        if (si < bi) s(si) = v * 0.5
+        else if (si > bi) s(si) = v * 1.5
+        p += 1
+      }
+      s
+    }
+
+    private def scalarIncDec(j: Int, valence: Double): Double = {
+      val base = if (ent(j) == null) 0.0 else ent(j).booster
+      if (base == 0.0) 0.0
+      else {
         var scalar = base
         if (valence < 0) scalar *= -1
-        if (isUpperPy(word) && isCapDiff)
+        if (up(j) && isCapDiff)
           scalar += (if (valence > 0) CIncr else -CIncr)
         scalar
-    }
-  }
-
-  private def neverCheck(valence0: Double, w: Array[String], startI: Int, i: Int): Double = {
-    var valence = valence0
-    if (startI == 0) {
-      if (negated(w(i - 1))) valence *= NScalar
-    }
-    if (startI == 1) {
-      if (w(i - 2) == "never" && (w(i - 1) == "so" || w(i - 1) == "this"))
-        valence *= 1.5
-      else if (negated(w(i - startI - 1))) valence *= NScalar
-    }
-    if (startI == 2) {
-      // faithful to the Python operator precedence:
-      // (never && (so||this at i-2)) || (so||this at i-1)
-      if ((w(i - 3) == "never" && (w(i - 2) == "so" || w(i - 2) == "this")) ||
-          (w(i - 1) == "so" || w(i - 1) == "this"))
-        valence *= 1.25
-      else if (negated(w(i - startI - 1))) valence *= NScalar
-    }
-    valence
-  }
-
-  private def idiomsCheck(valence0: Double, w: Array[String], i: Int): Double = {
-    // nltk 3.8.1 builds idiom/booster bigrams from the tokens AS-IS
-    // (case-sensitive) — "THE SHIT" does NOT hit the idiom table
-    var valence = valence0
-    def lw(j: Int) = w(j)
-    val oneZero = s"${lw(i - 1)} ${lw(i)}"
-    val twoOneZero = s"${lw(i - 2)} ${lw(i - 1)} ${lw(i)}"
-    val twoOne = s"${lw(i - 2)} ${lw(i - 1)}"
-    val threeTwoOne = s"${lw(i - 3)} ${lw(i - 2)} ${lw(i - 1)}"
-    val threeTwo = s"${lw(i - 3)} ${lw(i - 2)}"
-    val sequences = Seq(oneZero, twoOneZero, twoOne, threeTwoOne, threeTwo)
-    sequences.find(SpecialCaseIdioms.contains).foreach(s => valence = SpecialCaseIdioms(s))
-    if (w.length - 1 > i) {
-      val zeroOne = s"${lw(i)} ${lw(i + 1)}"
-      if (SpecialCaseIdioms.contains(zeroOne)) valence = SpecialCaseIdioms(zeroOne)
-    }
-    if (w.length - 1 > i + 1) {
-      val zeroOneTwo = s"${lw(i)} ${lw(i + 1)} ${lw(i + 2)}"
-      if (SpecialCaseIdioms.contains(zeroOneTwo)) valence = SpecialCaseIdioms(zeroOneTwo)
-    }
-    if (BoosterDict.contains(threeTwo) || BoosterDict.contains(twoOne))
-      valence += BDecr
-    valence
-  }
-
-  private def leastCheck(valence0: Double, w: Array[String], i: Int): Double = {
-    var valence = valence0
-    if (i > 1 && !Lexicon.contains(w(i - 1).toLowerCase) && w(i - 1).toLowerCase == "least") {
-      if (w(i - 2).toLowerCase != "at" && w(i - 2).toLowerCase != "very")
-        valence *= NScalar
-    } else if (i > 0 && !Lexicon.contains(w(i - 1).toLowerCase) && w(i - 1).toLowerCase == "least") {
-      valence *= NScalar
-    }
-    valence
-  }
-
-  private def sentimentValence(w: Array[String], isCapDiff: Boolean,
-                               item: String, i: Int): Double = {
-    val itemLower = item.toLowerCase
-    if (!Lexicon.contains(itemLower)) return 0.0
-    var valence = Lexicon(itemLower)
-    if (isUpperPy(item) && isCapDiff)
-      valence += (if (valence > 0) CIncr else -CIncr)
-    var startI = 0
-    while (startI < 3) {
-      if (i > startI && !Lexicon.contains(w(i - startI - 1).toLowerCase)) {
-        var s = scalarIncDec(w(i - startI - 1), valence, isCapDiff)
-        if (startI == 1 && s != 0) s *= 0.95
-        if (startI == 2 && s != 0) s *= 0.9
-        valence += s
-        valence = neverCheck(valence, w, startI, i)
-        if (startI == 2) valence = idiomsCheck(valence, w, i)
       }
-      startI += 1
     }
-    leastCheck(valence, w, i)
+
+    private def neverCheck(valence0: Double, startI: Int, i: Int): Double = {
+      var valence = valence0
+      if (startI == 0) {
+        if (neg(i - 1)) valence *= NScalar
+      }
+      if (startI == 1) {
+        if (w(i - 2) == "never" && (w(i - 1) == "so" || w(i - 1) == "this"))
+          valence *= 1.5
+        else if (neg(i - startI - 1)) valence *= NScalar
+      }
+      if (startI == 2) {
+        // faithful to the Python operator precedence:
+        // (never && (so||this at i-2)) || (so||this at i-1)
+        if ((w(i - 3) == "never" && (w(i - 2) == "so" || w(i - 2) == "this")) ||
+            (w(i - 1) == "so" || w(i - 1) == "this"))
+          valence *= 1.25
+        else if (neg(i - startI - 1)) valence *= NScalar
+      }
+      valence
+    }
+
+    private def keyBigramAt(p: Int): Boolean =
+      p + 1 < n && {
+        val seconds = keyBigrams.get(w(p))
+        seconds != null && seconds.contains(w(p + 1))
+      }
+
+    private def idiomsCheck(valence0: Double, i: Int): Double = {
+      if (!(keyBigramAt(i - 3) || keyBigramAt(i - 2) || keyBigramAt(i - 1) || keyBigramAt(i)))
+        return valence0
+      // nltk 3.8.1 builds idiom/booster bigrams from the tokens AS-IS
+      // (case-sensitive) — "THE SHIT" does NOT hit the idiom table
+      var valence = valence0
+      val oneZero = s"${w(i - 1)} ${w(i)}"
+      val twoOneZero = s"${w(i - 2)} ${w(i - 1)} ${w(i)}"
+      val twoOne = s"${w(i - 2)} ${w(i - 1)}"
+      val threeTwoOne = s"${w(i - 3)} ${w(i - 2)} ${w(i - 1)}"
+      val threeTwo = s"${w(i - 3)} ${w(i - 2)}"
+      val sequences = Seq(oneZero, twoOneZero, twoOne, threeTwoOne, threeTwo)
+      sequences.find(SpecialCaseIdioms.contains).foreach(s => valence = SpecialCaseIdioms(s))
+      if (n - 1 > i) {
+        val zeroOne = s"${w(i)} ${w(i + 1)}"
+        if (SpecialCaseIdioms.contains(zeroOne)) valence = SpecialCaseIdioms(zeroOne)
+      }
+      if (n - 1 > i + 1) {
+        val zeroOneTwo = s"${w(i)} ${w(i + 1)} ${w(i + 2)}"
+        if (SpecialCaseIdioms.contains(zeroOneTwo)) valence = SpecialCaseIdioms(zeroOneTwo)
+      }
+      if (BoosterDict.contains(threeTwo) || BoosterDict.contains(twoOne))
+        valence += BDecr
+      valence
+    }
+
+    private def leastCheck(valence0: Double, i: Int): Double = {
+      var valence = valence0
+      if (i > 1 && !inLex(i - 1) && lw(i - 1) == "least") {
+        if (lw(i - 2) != "at" && lw(i - 2) != "very")
+          valence *= NScalar
+      } else if (i > 0 && !inLex(i - 1) && lw(i - 1) == "least") {
+        valence *= NScalar
+      }
+      valence
+    }
+
+    private def sentimentValence(i: Int): Double = {
+      if (!inLex(i)) return 0.0
+      var valence = ent(i).valence
+      if (up(i) && isCapDiff)
+        valence += (if (valence > 0) CIncr else -CIncr)
+      var startI = 0
+      while (startI < 3) {
+        if (i > startI && !inLex(i - startI - 1)) {
+          var s = scalarIncDec(i - startI - 1, valence)
+          if (startI == 1 && s != 0) s *= 0.95
+          if (startI == 2 && s != 0) s *= 0.9
+          valence += s
+          valence = neverCheck(valence, startI, i)
+          if (startI == 2) valence = idiomsCheck(valence, i)
+        }
+        startI += 1
+      }
+      leastCheck(valence, i)
+    }
   }
 
-  private def butCheck(w: Array[String], sentiments: Array[Double]): Array[Double] = {
-    val bi = {
-      val b = w.indexOf("but")
-      if (b >= 0) b else w.indexOf("BUT")
-    }
-    if (bi < 0) return sentiments
-    val buf = sentiments.clone()
-    var p = 0
-    while (p < buf.length) {
-      val v = buf(p)
-      val si = buf.indexOf(v) // first-index-of-value quirk, as in the original
-      if (si < bi) buf(si) = v * 0.5
-      else if (si > bi) buf(si) = v * 1.5
-      p += 1
-    }
-    buf
-  }
-
-  private def amplifyEp(text: String): Double = {
+  /** _punctuation_emphasis: 0.292 per "!" (at most 4); "?" adds 0.18
+    * each for 2-3 marks, a flat 0.96 beyond. */
+  private def punctuationEmphasis(text: String): Double = {
     val epCount = math.min(text.count(_ == '!'), 4)
-    epCount * 0.292
-  }
-
-  private def amplifyQm(text: String): Double = {
     val qmCount = text.count(_ == '?')
-    if (qmCount > 1) { if (qmCount <= 3) qmCount * 0.18 else 0.96 } else 0.0
+    epCount * 0.292 + (if (qmCount > 1) { if (qmCount <= 3) qmCount * 0.18 else 0.96 } else 0.0)
   }
 
   private def normalize(score: Double, alpha: Double = 15.0): Double = {
@@ -318,39 +426,26 @@ object Vader {
 
   case class Scores(neg: Double, neu: Double, pos: Double, compound: Double)
 
-  def polarityScores(text0: String): Scores = {
-    val text = if (text0 == null) "" else text0
-    val w = wordsAndEmoticons(text)
-    val isCapDiff = allcapDifferential(w)
-    // first-occurrence index per token (Python list.index quirk), O(n)
-    val firstIdx = new java.util.HashMap[String, Integer](w.length * 2)
+  /** Python sum(), left to right. */
+  private def sum(xs: Array[Double]): Double = {
+    var t = 0.0
     var k = 0
-    while (k < w.length) {
-      if (!firstIdx.containsKey(w(k))) firstIdx.put(w(k), k)
-      k += 1
-    }
-    val sentiments = new Array[Double](w.length)
-    k = 0
-    while (k < w.length) {
-      val item = w(k)
-      val i: Int = firstIdx.get(item)
-      val il = item.toLowerCase
-      val kindOf = i < w.length - 1 && il == "kind" && w(i + 1).toLowerCase == "of"
-      sentiments(k) =
-        if (kindOf || BoosterDict.contains(il)) 0.0
-        else sentimentValence(w, isCapDiff, item, i)
-      k += 1
-    }
-    val adjusted = butCheck(w, sentiments)
-    scoreValence(adjusted, text)
+    while (k < xs.length) { t += xs(k); k += 1 }
+    t
   }
 
-  private def scoreValence(sentiments: Array[Double], text: String): Scores = {
-    if (sentiments.isEmpty) return Scores(0.0, 0.0, 0.0, 0.0)
-    var sumS = sentiments.sum
-    val punctEmph = amplifyEp(text) + amplifyQm(text)
+  /** score_valence's compound from the (non-zero) valence sum. */
+  private def compoundOf(sum: Double, punctEmph: Double): Double = {
+    var sumS = sum
     if (sumS > 0) sumS += punctEmph else if (sumS < 0) sumS -= punctEmph
-    val compound = normalize(sumS)
+    roundHalfEven(normalize(sumS), 4)
+  }
+
+  def polarityScores(text0: String): Scores = {
+    val text = if (text0 == null) "" else text0
+    val sentiments = new SentiText(text).sentiments()
+    if (sentiments.isEmpty) return Scores(0.0, 0.0, 0.0, 0.0)
+    val punctEmph = punctuationEmphasis(text)
     var posSum = 0.0; var negSum = 0.0; var neuCount = 0.0
     sentiments.foreach { s =>
       if (s > 0) posSum += s + 1
@@ -365,9 +460,16 @@ object Vader {
       roundHalfEven(abs(neg / total), 3),
       roundHalfEven(abs(neuCount / total), 3),
       roundHalfEven(abs(pos / total), 3),
-      roundHalfEven(compound, 4))
+      compoundOf(sum(sentiments), punctEmph))
   }
 
-  /** The only field the reference consumes (sentiment.py:218). */
-  def compound(text: String): Double = polarityScores(text).compound
+  /** The only field the reference consumes (sentiment.py:218): the
+    * polarityScores compound without the pos/neg/neu tail, 0.0 at once
+    * when the valence sum is 0 (normalize(0) == 0). */
+  def compound(text0: String): Double = {
+    val text = if (text0 == null) "" else text0
+    val sentiments = new SentiText(text).sentiments()
+    val total = sum(sentiments)
+    if (total == 0.0) 0.0 else compoundOf(total, punctuationEmphasis(text))
+  }
 }

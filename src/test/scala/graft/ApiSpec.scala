@@ -166,6 +166,10 @@ class ApiSpec extends AnyFunSuite with Matchers with SparkTestBase {
     rows.head.getDouble(1) shouldBe 0.4404
   }
 
+  test("the session extension registers vader_compound") {
+    GraftExtensions.builders.map(_._1) should contain("vader_compound")
+  }
+
   test("the fused kernel expressions are callable from SQL after registration") {
     GraftExtensions.register(spark)
     val r = spark.sql(

@@ -3,7 +3,8 @@ package graft
 import scala.io.Source
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import graft.functions.PiiScan
+import org.apache.spark.sql.functions.col
+import graft.functions.{PiiScan, VaderUdf}
 import graft.rules.{PiiRules, Vader}
 
 /**
@@ -14,7 +15,7 @@ import graft.rules.{PiiRules, Vader}
  * F1 evidence (agreement rate 1.0 ⇒ F1 = 1.0 vs reference labels on
  * this corpus).
  */
-class DifferentialSpec extends AnyFunSuite with Matchers {
+class DifferentialSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
   private def lines(res: String): Seq[String] =
     Source.fromInputStream(getClass.getResourceAsStream(res), "UTF-8")
@@ -84,20 +85,43 @@ class DifferentialSpec extends AnyFunSuite with Matchers {
     else s
   }
 
-  test("VADER agrees with the reference replica on all 3000 differential cases") {
-    var checked = 0
-    lines("/vader_differential.jsonl").foreach { line =>
+  /** (text, compound, pos, neg, neu) of one VADER corpus. */
+  private def vaderCases(res: String): Seq[(String, Double, Double, Double, Double)] =
+    lines(res).map { line =>
       val kv = parseLine(line)
-      val text = jstr(kv("text").stripPrefix("\"").stripSuffix("\""))
-      val s = Vader.polarityScores(text)
-      withClue(s"text: '$text'") {
-        s.compound shouldBe kv("compound").toDouble +- 1e-9
-        s.pos shouldBe kv("pos").toDouble +- 1e-9
-        s.neg shouldBe kv("neg").toDouble +- 1e-9
-        s.neu shouldBe kv("neu").toDouble +- 1e-9
-      }
-      checked += 1
+      (jstr(kv("text").stripPrefix("\"").stripSuffix("\"")), kv("compound").toDouble,
+        kv("pos").toDouble, kv("neg").toDouble, kv("neu").toDouble)
     }
-    checked shouldBe 3000
+
+  private val vaderCorpora = Seq(
+    ("/vader_differential.jsonl", 3000, "differential"),
+    ("/vader_differential_long.jsonl", 2000, "long differential"))
+
+  vaderCorpora.foreach { case (res, size, name) =>
+    test(s"VADER agrees with the reference replica on all $size $name cases") {
+      val cases = vaderCases(res)
+      cases.foreach { case (text, c, p, n, u) =>
+        val s = Vader.polarityScores(text)
+        withClue(s"text: '$text'") {
+          s.compound shouldBe c +- 1e-9
+          s.pos shouldBe p +- 1e-9
+          s.neg shouldBe n +- 1e-9
+          s.neu shouldBe u +- 1e-9
+          Vader.compound(text) shouldBe s.compound
+        }
+      }
+      cases.size shouldBe size
+    }
+
+    test(s"vader_compound through Spark equals Vader.compound on the $size $name cases") {
+      import spark.implicits._
+      val cases = vaderCases(res)
+      val got = cases.map(_._1).toDF("text").repartition(4)
+        .select(col("text"), VaderUdf.compound(col("text"))).collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap
+      cases.foreach { case (text, _, _, _, _) =>
+        withClue(s"text: '$text'") { got(text) shouldBe Vader.compound(text) }
+      }
+    }
   }
 }

@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
+import graft.functions.VaderUdf
 import graft.rules.Vader
 
 /**
@@ -13,7 +17,7 @@ import graft.rules.Vader
  * 0.431, 0.8316, -0.7424, -0.5461, 0.5672 …), pinning both algorithm
  * and lexicon values.
  */
-class VaderSpec extends AnyFunSuite with Matchers {
+class VaderSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
   // (text, compound, pos, neg, neu)
   private val golden: Seq[(String, Double, Double, Double, Double)] = Seq(
@@ -100,5 +104,56 @@ class VaderSpec extends AnyFunSuite with Matchers {
   test("label thresholds match the reference (sentiment.py:325-337)") {
     // compound == 0 → neutral, > 0 → happy, < 0 → sad
     Vader.compound("the deployment finished") shouldBe 0.0
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** vader_compound over the golden texts plus a NULL, with codegen
+    * forced on or off; returns the (text, score) rows, the executed
+    * whole-stage codegen stages and the schema. */
+  private def scored(codegen: Boolean) = {
+    import spark.implicits._
+    val conf = Map(
+      "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"),
+      "spark.sql.codegen.wholeStage" -> codegen.toString)
+    val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      // repartition keeps the projection out of the optimizer's
+      // LocalRelation folding, so it runs in the physical plan
+      val df = (golden.map(g => Option(g._1)) :+ None).toDF("t").repartition(2)
+        .select(col("t"), VaderUdf.compound(col("t")).as("v"))
+      val rows = df.collect().map(r => Option(r.getString(0)) -> r.getDouble(1)).toMap
+      val codegenStages = Plans.collect(df.queryExecution.executedPlan) {
+        case w: WholeStageCodegenExec => w.toString
+      }
+      (rows, codegenStages, df.schema)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("vader_compound: codegen and interpreted output are equal and match the goldens") {
+    val (gen, genStages, _) = scored(codegen = true)
+    val (interp, interpStages, _) = scored(codegen = false)
+    genStages.exists(_.contains("vader_compound")) shouldBe true
+    interpStages shouldBe empty
+    gen shouldBe interp
+    golden.foreach { case (text, c, _, _, _) =>
+      withClue(s"text: '$text'") { gen(Some(text)) shouldBe c }
+    }
+  }
+
+  test("vader_compound(NULL) is 0.0, as the UDF scored it, and the column is not nullable") {
+    Seq(true, false).foreach { codegen =>
+      val (rows, _, schema) = scored(codegen)
+      rows(None) shouldBe 0.0
+      schema("v").nullable shouldBe false
+    }
+    GraftExtensions.register(spark)
+    val r = spark.sql("SELECT vader_compound(NULL) AS v")
+    r.head().getDouble(0) shouldBe 0.0
+    r.schema("v").nullable shouldBe false
   }
 }

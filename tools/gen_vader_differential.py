@@ -15,8 +15,17 @@
 # plus random ALL-CAPS emphasis, '!'/'?' punctuation tails, and 'but'
 # insertions to exercise every scoring branch.
 #
-# Determinism: fixed seed; regenerating on any machine yields the same
-# file. Run from the repo root:  python3 tools/gen_vader_differential.py
+# A second, long-text corpus (src/test/resources/
+# vader_differential_long.jsonl, its own seed) draws 20-60 tokens per
+# text from a small per-text pool, so tokens repeat (the list.index
+# quirk), and places idioms, "kind of", "at least", "very least",
+# "never so/this" and "but"/"But"/"BUT" at positions 0-3 and at the end,
+# with mixed caps and "!"/"?" tails.
+#
+# Determinism: fixed seeds; regenerating on any machine yields the same
+# files. Run from the repo root:
+#   python3 tools/gen_vader_differential.py          # write both corpora
+#   python3 tools/gen_vader_differential.py --check  # compare, write nothing
 import json
 import os
 import random
@@ -84,18 +93,88 @@ def make_text():
     return text
 
 
-def main():
-    out = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
-                       "src", "test", "resources", "vader_differential.jsonl")
+LONG_CONSTRUCTS = [c.split() for c in idioms] + [
+    ["kind", "of"], ["at", "least"], ["very", "least"], ["least"],
+    ["never", "so"], ["never", "this"], ["but"], ["But"], ["BUT"],
+]
+
+
+def make_long_text(r):
+    """20-60 tokens from a 6-14 word pool, constructs near both ends."""
+    pool = [r.choice(lex_words) for _ in range(r.randint(3, 7))]
+    pool += [r.choice(neutral) for _ in range(r.randint(2, 4))]
+    pool += [r.choice(boosters + negators) for _ in range(r.randint(1, 3))]
+    toks = [r.choice(pool) for _ in range(r.randint(20, 60))]
+    for _ in range(r.randint(1, 3)):
+        pos = r.randint(0, 3) if r.random() < 0.5 else len(toks)
+        toks[pos:pos] = r.choice(LONG_CONSTRUCTS)
+    caps = r.random()
+    if caps < 0.3:
+        toks = [t.upper() if r.random() < 0.15 else t for t in toks]
+    elif caps < 0.4:
+        toks = [t.capitalize() if r.random() < 0.3 else t for t in toks]
+    text = " ".join(toks)
+    tail = r.random()
+    if tail < 0.2:
+        text += "!" * r.randint(1, 5)
+    elif tail < 0.4:
+        text += "?" * r.randint(1, 5)
+    elif tail < 0.45:
+        text += r.choice(["?!", "!?", "!?!?", ".", "..."])
+    return text
+
+
+def corpus(texts):
     sia = vader_ref.SIA()
-    with open(out, "w") as f:
-        for _ in range(3000):
-            t = make_text()
-            s = sia.polarity_scores(t)
-            f.write(json.dumps({"text": t, "compound": s["compound"],
-                                "pos": s["pos"], "neg": s["neg"],
-                                "neu": s["neu"]}) + "\n")
-    print(f"wrote 3000 cases to {out}")
+    lines = []
+    for t in texts:
+        s = sia.polarity_scores(t)
+        lines.append(json.dumps({"text": t, "compound": s["compound"],
+                                 "pos": s["pos"], "neg": s["neg"],
+                                 "neu": s["neu"]}) + "\n")
+    return lines
+
+
+def corpora():
+    """(path, lines) of both corpora, regenerated from their seeds."""
+    res = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..",
+                       "src", "test", "resources")
+    short = corpus([make_text() for _ in range(3000)])
+    r = random.Random(20261017)
+    long_ = corpus([make_long_text(r) for _ in range(2000)])
+    return [(os.path.join(res, "vader_differential.jsonl"), short),
+            (os.path.join(res, "vader_differential_long.jsonl"), long_)]
+
+
+def check(path, lines):
+    """None when the committed file equals `lines`, else the first
+    differing line as a message."""
+    with open(path) as f:
+        have = f.readlines()
+    for n, (a, b) in enumerate(zip(have, lines), 1):
+        if a != b:
+            return f"{path}:{n}: committed {a.rstrip()!r} != regenerated {b.rstrip()!r}"
+    if len(have) != len(lines):
+        return (f"{path}:{min(len(have), len(lines)) + 1}: committed has "
+                f"{len(have)} lines, regenerated {len(lines)}")
+    return None
+
+
+def main():
+    if sys.argv[1:] == ["--check"]:
+        bad = [m for m in (check(p, ls) for p, ls in corpora()) if m]
+        for m in bad:
+            print(m, file=sys.stderr)
+        if bad:
+            sys.exit(1)
+        print("both corpora match their generator")
+        return
+    if sys.argv[1:]:
+        sys.exit("usage: gen_vader_differential.py [--check]")
+    for path, lines in corpora():
+        with open(path, "w") as f:
+            f.writelines(lines)
+        print(f"wrote {len(lines)} cases to {path}")
 
 
 if __name__ == "__main__":
